@@ -624,25 +624,23 @@ def simhash_batch(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
                 toks = _java_tokens(text if text is not None else "")
                 flat.extend(tok_hash(t) for t in toks)
                 offsets.append(len(flat))
-            h = np.asarray(flat, dtype=np.int64)
-            # clip: an empty trailing segment would index past the end
-            # (its reduceat value is garbage either way — masked below)
-            starts = np.minimum(
-                np.asarray(offsets[:-1], dtype=np.intp),
-                max(len(flat) - 1, 0))
+            # one zero pad past the last token: a token-less trailing doc
+            # starts at len(flat), which must stay a valid index without
+            # shortening the previous doc's segment
+            h = np.asarray(flat + [0], dtype=np.int64)
+            starts = np.asarray(offsets[:-1], dtype=np.intp)
             lens = np.diff(offsets)
             sigs = np.zeros(len(pdf), dtype=np.int64)
-            if len(flat):
-                for b in range(bits):
-                    # sign-sum = 2*(count of 1-bits) - token count; one
-                    # 1-D pass per bit keeps temporaries at one row
-                    ones = np.add.reduceat((h >> b) & 1, starts)
-                    sums = 2 * ones - lens
-                    # reduceat quirk: an empty segment returns the
-                    # element AT the start index — an empty token array
-                    # contributes nothing to any bit (the explode_outer
-                    # null row's 0 contribution)
-                    sigs[(sums > 0) & (lens > 0)] |= np.int64(1) << b
+            for b in range(bits):
+                # sign-sum = 2*(count of 1-bits) - token count; one
+                # 1-D pass per bit keeps temporaries at one row
+                ones = np.add.reduceat((h >> b) & 1, starts)
+                sums = 2 * ones - lens
+                # reduceat quirk: an empty segment returns the element
+                # AT the start index — an empty token array contributes
+                # nothing to any bit (the explode_outer null row's 0
+                # contribution)
+                sigs[(sums > 0) & (lens > 0)] |= np.int64(1) << b
             out = pd.DataFrame({
                 id_col: pdf[id_col],
                 "simhash": pd.Series(sigs, dtype="int64"),

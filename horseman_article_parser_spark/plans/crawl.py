@@ -11,26 +11,28 @@ enqueued with priority = link_depth + in_article_link_score, emitted in
 deterministic (priority, seq) order under per-host politeness budgets.
 
 Scale shape of one round (what the plan compiles to):
-  pending scan (parquet, host-bucketed)            — no shuffle
+  pending scan (parquet)                           — no shuffle
   robots broadcast join                            — no shuffle
   two-phase host budget                            — 2 window shuffles,
                                                       salt-bounded keys
   top-k wave (orderBy+limit = TakeOrdered)         — per-partition top-k
-  fetch + extract (mapInPandas)                    — 1 Arrow crossing
-  link canonicalize + skip filter (codegen + UDF)  — narrow
-  in-batch dedup groupBy(target)                   — 1 shuffle
-  seen-filter test-and-set (shard shuffle)         — 1 shuffle
-  seq assignment (range-partitioned rank)          — 1 range shuffle
-  pending' = pending ⟕̸ wave ∪ new                  — anti-join shuffle
+  fetch + extract + link canonicalize              — 1 Arrow crossing
+    (mapInPandas; emits article + link_targets)
+  posexplode(link_targets) + skip/depth filter     — narrow, JVM codegen
+  seen-filter claim (bloom: in-batch dedup runs    — 1 shard shuffle
+    inside the shard task)
+  seq = parent_pos * LINK_POS_STRIDE + link_pos    — arithmetic, narrow
+  pending' = pending ⟕̸ broadcast(wave) ∪ new       — no frontier shuffle
 
-Every per-row computation is a vectorized pandas/Arrow UDF; all
-predicates/windows/joins are JVM-side (BASELINE.json input_hint).
+The only Python in a round is the fetch+extract kernel and the seen
+filter's shard task; every predicate/window/join is JVM-side.
 """
 
 from __future__ import annotations
 
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -38,7 +40,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..datagen.synthweb import fetch_page
-from ..functions.urls import canonicalize_url_udf, skip_col
+from ..functions.urls import canonicalize_url, skip_col
 from ..operators.frontier_ops import (
     build_wave0,
     with_host,
@@ -130,6 +132,15 @@ class CrawlConfig:
     token_buckets: bool = False
     bucket_cap_rounds: int = 2
     extra: dict = field(default_factory=dict)
+
+
+def link_targets(article: dict) -> list[str | None] | None:
+    """canonicalize_url of each `article["links"]` href, index-aligned
+    with the links (NULL where an href does not canonicalize)."""
+    links = article.get("links")
+    if links is None:
+        return None
+    return [canonicalize_url(link["href"]) for link in links]
 
 
 FRONTIER_COLS = ["url", "seq", "host", "depth", "priority", "attempt", "not_before"]
@@ -230,15 +241,18 @@ class CrawlScheduler:
     # ------------------------------------------------------------ round
 
     def _fetch_extract(self, wave: DataFrame) -> DataFrame:
-        """Fetch + article extraction FUSED into one Arrow crossing.
+        """Fetch + article extraction + link canonicalization FUSED into
+        one Arrow crossing: each wave row comes back with `status`,
+        `source`, the `article` struct and `link_targets`, the
+        canonical form of every `article.links` href (index-aligned, so
+        posexplode positions match the links).
 
-        Two chained mapInPandas stages would run two Python workers per
-        task with a JVM relay between them (2 × parallelism concurrent
-        CPython processes and a double Arrow round-trip of the raw
-        html); fusing them halves the worker count and ships html
-        JVM→Python exactly once — html never returns to the JVM at all,
-        only the narrow article struct does (results persist the struct;
-        the raw page is re-fetchable by URL)."""
+        Chained mapInPandas stages or a canonicalize UDF would each run
+        their own Python workers per task with a JVM relay between them;
+        fusing keeps one worker per task and ships html JVM→Python
+        exactly once — html never returns to the JVM, only the narrow
+        article struct and the link targets do (results persist the
+        struct; the raw page is re-fetchable by URL)."""
         from ..functions.urls import amp_candidates
         from ..operators.extract import ARTICLE_STRUCT, extract_article
 
@@ -248,7 +262,8 @@ class CrawlScheduler:
         parts = self.config.fetch_partitions or self.spark.sparkContext.defaultParallelism
         schema = ", ".join(
             f"`{f.name}` {f.dataType.simpleString()}" for f in wave.schema.fields
-        ) + f", `status` int, `source` string, `article` {ARTICLE_STRUCT.simpleString()}"
+        ) + (f", `status` int, `source` string, `article` {ARTICLE_STRUCT.simpleString()}"
+             ", `link_targets` array<string>")
 
         rescue = self.config.canonical_rescue
         probe_first = self.config.probe_first
@@ -297,8 +312,6 @@ class CrawlScheduler:
         concurrency = max(1, self.config.fetch_concurrency)
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from concurrent.futures import ThreadPoolExecutor
-
             for pdf in batches:
                 if not len(pdf):
                     continue
@@ -323,6 +336,7 @@ class CrawlScheduler:
                 pdf["status"] = status
                 pdf["source"] = source
                 pdf["article"] = articles
+                pdf["link_targets"] = [link_targets(a) for a in articles]
                 yield pdf
 
         return wave.repartition(parts).mapInPandas(run, schema=schema)
@@ -372,6 +386,13 @@ class CrawlScheduler:
         self.store.write(state, "host_state", round_no)
 
     def run_round(self, round_no: int) -> dict:
+        # one driver thread overlaps the wave and pending checkpoint
+        # writes with the round's other jobs; `with` joins it even when
+        # a write raises, so no writer outlives a failed round
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            return self._run_round(round_no, pool)
+
+    def _run_round(self, round_no: int, pool: ThreadPoolExecutor) -> dict:
         cfg = self.config
         spark = self.spark
         t0 = time.monotonic()
@@ -415,12 +436,11 @@ class CrawlScheduler:
         wave = top.withColumn("pos", F.row_number().over(w_pos) - 1)
         wave = wave.persist()
         # materialize the cache once, then the wave checkpoint write and
-        # the fetch+extract+results job run CONCURRENTLY from a small
-        # driver pool (guide §2.6 — independent jobs back-fill each
-        # other's stragglers; both only read the cached wave). The wave
-        # write costs ~0.4 s/round that was previously serial.
+        # the fetch+extract+results job run CONCURRENTLY on the driver
+        # pool (guide §2.6 — independent jobs back-fill each other's
+        # stragglers; both only read the cached wave). The wave write
+        # costs ~0.4 s/round that was previously serial.
         wave_count = wave.count()
-        from concurrent.futures import ThreadPoolExecutor
 
         def _write_wave() -> None:
             # sortWithinPartitions, not orderBy — the wave is a single
@@ -432,23 +452,22 @@ class CrawlScheduler:
             if cfg.token_buckets:
                 self._write_host_state(budget_df, wave, round_no)
 
-        pool = ThreadPoolExecutor(max_workers=1)
         fut_wave = pool.submit(_write_wave)
         t = _mark("wave_select", t0)
 
-        # --- fetch + extract (ONE fused Arrow crossing)
+        # --- fetch + extract + canonicalize (ONE fused Arrow crossing);
+        # link_targets feeds link expansion only, never the checkpoint
         articles = self._fetch_extract(wave).persist()
-        self.store.write(articles, "results", round_no)
+        self.store.write(articles.drop("link_targets"), "results", round_no)
         fut_wave.result()
         t = _mark("fetch_extract", t)
 
-        # --- link expansion → canonicalize → filter → dedup → claim
+        # --- link expansion → filter → dedup → claim (JVM-only)
         links = articles.filter(F.col("status") == 200).select(
             F.col("pos").alias("parent_pos"),
             F.col("depth").alias("parent_depth"),
-            F.posexplode_outer("article.links").alias("pos", "link"),
+            F.posexplode_outer("link_targets").alias("pos", "target"),
         )
-        links = links.withColumn("target", canonicalize_url_udf(F.col("link.href")))
         links = links.filter(
             F.col("target").isNotNull()
             & ~skip_col(F.col("target"))
@@ -556,7 +575,6 @@ class CrawlScheduler:
         )
         self.store.write(metrics, "metrics", round_no)
         fut_pending.result()
-        pool.shutdown(wait=True)
         # the commit marker lands only after EVERY table of the round is
         # on disk (the happens-before edge resume depends on)
         self.store.commit_round(round_no)

@@ -102,13 +102,33 @@ FORBIDDEN = {
 # degenerate single-row-group test parquet (absent at production
 # layouts). r6: the fan-out spreads by HASHING the table's natural
 # unique key (guide §2.5 — deterministic spread key, no
-# sort-before-repartition), so the check is an exchange COUNT bound,
-# not a textual hashpartitioning ban: a second exchange of any kind is
-# the regression (the old explode → hash-agg → window keywords shape
-# paid two; per-row predicates/transforms need none beyond the spread).
-# name -> allowed exchange count (url_filters unions two independent
-# scan branches, so it carries one fan-out per branch)
-MAX_EXCHANGES = {"url_filters": 2, "url_transforms": 1, "keywords_topk": 1}
+# sort-before-repartition), so the check is an exchange COUNT bound
+# plus a key check: every exchange present must be hashpartitioning on
+# exactly the input table's E._SPREAD_KEYS. A second exchange of any
+# kind, or one shuffle on any other key, is the regression (the old
+# explode → hash-agg → window keywords shape paid two; per-row
+# predicates/transforms need none beyond the spread).
+# name -> (input table, allowed exchange count); url_filters unions two
+# independent scan branches, so it carries one fan-out per branch
+MAX_EXCHANGES = {
+    "url_filters": ("documents", 2),
+    "url_transforms": ("documents", 1),
+    "keywords_topk": ("documents", 1),
+}
+
+
+def _exchange_keys(plan: str) -> list[list[str] | None]:
+    """Partitioning columns of each Exchange in a formatted plan, in
+    plan order: the hashpartitioning key names (expression ids
+    stripped), or None for any other partitioning."""
+    import re
+
+    out: list[list[str] | None] = []
+    for m in re.finditer(r"\(\d+\) Exchange\b[\s\S]*?Arguments: (.*)", plan):
+        hp = re.match(r"hashpartitioning\((.*?), \d+\)", m.group(1))
+        out.append(None if hp is None else
+                   [re.sub(r"#\d+L?$", "", k) for k in hp.group(1).split(", ")])
+    return out
 
 
 def _partitionless_windows(plan: str) -> list[str]:
@@ -143,14 +163,12 @@ def main() -> int:
             ok = needle not in plan
             print(f"{'PASS' if ok else 'FAIL'} {name}: forbid '{needle}' ({why})")
             failures += 0 if ok else 1
-    import re as _re0
-
-    for name, cap in MAX_EXCHANGES.items():
-        plan = plan_of(queries[name](spark, sf_dir))
-        n_ex = len(_re0.findall(r"\(\d+\) Exchange\b", plan))
-        ok = n_ex <= cap
-        print(f"{'PASS' if ok else 'FAIL'} {name}: at most {cap} exchange(s) "
-              f"(the input fan-out; found {n_ex})")
+    for name, (table, cap) in MAX_EXCHANGES.items():
+        keys = _exchange_keys(plan_of(queries[name](spark, sf_dir)))
+        spread = E._SPREAD_KEYS[table]
+        ok = len(keys) <= cap and all(k == spread for k in keys)
+        print(f"{'PASS' if ok else 'FAIL'} {name}: at most {cap} exchange(s), "
+              f"each the {table} spread on {spread} (found {keys})")
         failures += 0 if ok else 1
     # robots EVALUATION in isolation (pre-parsed rules, the per-round
     # hot path): frontier side shuffle-free — the only Exchange allowed

@@ -3,7 +3,10 @@ scheduled order must EXACTLY match the pure-Python reference simulator
 under the same seed list + politeness budget (north rule), and resume
 from checkpoint must continue identically."""
 
+import threading
+
 import pyspark.sql.functions as F
+import pytest
 
 from horseman_article_parser_spark.datagen.frontier import build_seed_frontier, seed_urls
 from horseman_article_parser_spark.plans.crawl import CrawlConfig, CrawlScheduler
@@ -190,3 +193,125 @@ def test_sim_streamed_seeds_between_rounds():
     # 8 arrive, budget 2 per host -> exactly the 2 lowest-url-rank ones
     assert got == ["https://streamed.example/late/0",
                    "https://streamed.example/late/1"]
+
+
+def _small_crawl(spark, tmp_path, fetch_fn):
+    seeds = spark.createDataFrame(
+        [(f"https://h{i}.x/story-{i}", i) for i in range(4)],
+        "url string, seq long",
+    )
+    cfg = CrawlConfig(wave_size=10, round0_limit=10, unique_hosts_round0=False,
+                      default_host_budget=5, n_shards=4, total_bloom_bits=1 << 16)
+    sched = CrawlScheduler(spark, str(tmp_path / "s"), cfg, fetch_fn=fetch_fn)
+    sched.init_from_seeds(seeds)
+    return sched
+
+
+def _page(hrefs):
+    anchors = "".join(
+        f'<a href="{h}">l{i}</a>' if h is not None else f"<a>l{i}</a>"
+        for i, h in enumerate(hrefs)
+    )
+    return 200, f"<html><body><article><p>body</p>{anchors}</article></body></html>"
+
+
+ADVERSARIAL_HREFS = [
+    None, "", "javascript:void(0)", "HTTP://Host.COM:80/x", "https://h:443/",
+    "http://[::1", "/relative/path?q=1#frag", "mailto:a@b.c",
+    "https://Ok.Example/a.pdf",
+]
+
+
+def test_fetch_extract_link_targets_match_canonicalize(spark, tmp_path):
+    """The fused fetch+extract kernel emits link_targets index-aligned
+    with article.links: link_targets[i] == canonicalize_url(links[i].href),
+    including hrefs that canonicalize to NULL and a page over the
+    1000-link cap."""
+    from horseman_article_parser_spark.functions.urls import canonicalize_url
+    from horseman_article_parser_spark.plans.crawl import link_targets
+
+    pages = {
+        "https://h0.x/story-0": _page(ADVERSARIAL_HREFS),
+        "https://h1.x/story-1": _page([f"/p/{i}" for i in range(1005)]),
+        "https://h2.x/story-2": (200, "<html><body>no links</body></html>"),
+        "https://h3.x/story-3": (404, ""),
+    }
+    sched = _small_crawl(spark, tmp_path, lambda u: pages[u])
+    wave = sched.store.read(spark, "pending", -1).withColumn("pos", F.col("seq").cast("int"))
+    rows = sched._fetch_extract(wave).collect()
+    assert len(rows) == 4
+    n_links = {}
+    for r in rows:
+        links = r.article.links
+        if links is None:
+            assert not r.link_targets
+            continue
+        assert len(r.link_targets) == len(links)
+        for link, target in zip(links, r.link_targets):
+            assert target == canonicalize_url(link.href), link.href
+        n_links[r.url] = len(links)
+    assert n_links["https://h1.x/story-1"] == 1000
+    h0 = next(r for r in rows if r.url == "https://h0.x/story-0")
+    assert h0.link_targets[3:5] == ["http://host.com/x", "https://h/"]
+    # a NULL href (never produced by the HTML extractor) maps to NULL
+    assert link_targets({"links": [{"href": None, "text": "t"}]}) == [None]
+    assert link_targets({"links": None}) is None
+
+
+def test_results_schema_unchanged(spark, tmp_path):
+    """link_targets is a kernel-internal column: the results checkpoint
+    keeps the wave columns plus status, source and the article struct."""
+    from horseman_article_parser_spark.operators.extract import ARTICLE_STRUCT
+
+    page = _page(["/a", "/b"])
+    sched = _small_crawl(spark, tmp_path, lambda u: page)
+    sched.run_round(0)
+    res = sched.store.read(spark, "results", 0)
+    assert [(f.name, f.dataType.simpleString()) for f in res.schema] == [
+        ("url", "string"), ("seq", "bigint"), ("host", "string"),
+        ("depth", "int"), ("priority", "double"), ("attempt", "int"),
+        ("not_before", "bigint"), ("pos", "int"), ("status", "int"),
+        ("source", "string"), ("article", ARTICLE_STRUCT.simpleString()),
+    ]
+
+
+def test_run_round_has_no_arrow_eval_python(spark, tmp_path):
+    """Link canonicalization runs inside the fetch+extract kernel, so no
+    SQL execution of a round plans a scalar Python UDF node."""
+    jss = spark._jsparkSession
+    store = jss.sharedState().statusStore()
+
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    page = _page(["/a", "HTTP://B.x:80/"])
+    sched = _small_crawl(spark, tmp_path, lambda u: page)
+    mark = max((e.executionId() for e in executions()), default=-1)
+    sched.run_round(0)
+    plans = [e.physicalPlanDescription() for e in executions()
+             if e.executionId() > mark]
+    assert any("MapInPandas" in p for p in plans)
+    assert not [p for p in plans if "ArrowEvalPython" in p]
+
+
+def test_run_round_joins_pool_when_write_raises(spark, tmp_path):
+    """A failing results write propagates and leaves no checkpoint
+    writer thread behind."""
+    page = _page(["/a"])
+    sched = _small_crawl(spark, tmp_path, lambda u: page)
+    write = sched.store.write
+
+    def failing_write(df, kind, round_no):
+        if kind == "results":
+            raise OSError("disk full")
+        write(df, kind, round_no)
+
+    sched.store.write = failing_write
+    before = set(threading.enumerate())
+    with pytest.raises(OSError, match="disk full"):
+        sched.run_round(0)
+    leaked = [t for t in threading.enumerate()
+              if t not in before and t.name.startswith("ThreadPoolExecutor")]
+    assert not leaked

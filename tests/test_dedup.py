@@ -210,8 +210,17 @@ def test_simhash_kernel_matches_declarative(spark):
          (5, "The quick-brown FOX! jumps\nover 42 lazy dogs.")],
         "doc_id long, text string",
     )
+    # one batch ending in token-less docs: the last non-empty doc's
+    # segment must keep its final token
+    trailing = spark.createDataFrame(
+        [(10, "alpha beta gamma"), (11, "delta epsilon"), (12, "zeta eta"),
+         (13, "theta"), (14, "iota kappa lambda mu"), (15, "nu xi"),
+         (16, "omicron pi rho"), (17, "sigma tau"), (18, "upsilon phi chi"),
+         (19, "psi omega"), (20, "   "), (21, "")],
+        "doc_id long, text string",
+    ).coalesce(1)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    for d in (edge, docs.select("doc_id", "text")):
+    for d in (edge, trailing, docs.select("doc_id", "text")):
         a = sorted(map(tuple, simhash(d, bits=16).collect()))
         b = sorted(map(tuple, simhash_batch(d, bits=16).collect()))
         assert a == b, next((x, y) for x, y in zip(a, b) if x != y)
